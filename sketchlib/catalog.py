@@ -39,7 +39,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
-from . import store
+from . import serde, store
 from .bloom import BloomFilter
 from .countmin import CMConfig, CountMinSketch
 from .countsketch import CSConfig, CountSketch
@@ -48,7 +48,6 @@ from .ddsketch import DDSketch
 from .dyadic import DyadicCM
 from .hll import HllSketch
 from .incremental import (_current_files, _diff_files,
-                          _grouped_manifest_state, _manifest_state,
                           current_group_sketches, grouped_epoch,
                           incremental_build, incremental_build_grouped)
 from .kll import KllSketch
@@ -148,6 +147,52 @@ def _factory_from_spec(spec: dict):
     parts = tuple(_KINDS[e["kind"]][1](e["params"])
                   for e in spec["kinds"])
     return functools.partial(MultiSketch, parts)
+
+
+def _committed(store_path: str, name: str, seq: int | None = None):
+    """((epoch, base), meta of the latest committed row) of a grouped
+    lineage — at its committed epoch, or at the committed epoch ``seq``;
+    None when nothing (or not ``seq``) is committed. The meta carries
+    the COMMITTED spec: a crashed rebuild with a changed spec leaves
+    orphan rows above the epoch whose spec was never committed."""
+    pins = store.read_epoch(store_path, name, seq=seq)
+    if pins is None:
+        return None
+    row = store.read_winner(store_path, prefix=name, min_seq=pins[1],
+                            max_seq=pins[0], blob=False)
+    return None if row is None else (pins, row["meta"])
+
+
+def _registrations(store_path: str) -> list[tuple[str, int, dict]]:
+    """(entry name, seq, meta) of every catalog registration: global
+    entries at their winner, grouped fleets (one per fleet, rows
+    "catalogg-<hash>/<group>") at their committed epoch with the
+    committed row's meta. Store metadata only — no blob is read."""
+    keys, _ = store.winner_keys(store_path)
+    names = {n.split("/", 1)[0] if n.startswith("catalogg-") else n
+             for n in keys["name"].to_pylist()
+             if n.startswith(("catalog/", "catalogg-"))}
+    out = []
+    for entry in sorted(names):
+        if entry.startswith("catalogg-"):
+            got = _committed(store_path, entry)
+            if got is not None:     # nothing committed: not listable
+                out.append((entry, got[0][0], got[1]))
+        else:
+            row = store.read_winner(store_path, entry, blob=False)
+            out.append((entry, row["seq"], row["meta"]))
+    return [r for r in out if "catalog_spec" in r[2]]
+
+
+def _fleet_sketches(pdfs, plen: int):
+    """(group, sketch) of every winner row in mapInPandas batches of
+    (name, seq, sha256, blob) — each blob sha-verified before it is
+    deserialized."""
+    for pdf in pdfs:
+        for nm, seq, sha, blob in zip(pdf["name"], pdf["seq"],
+                                      pdf["sha256"], pdf["blob"]):
+            yield nm[plen:], serde.loads(
+                store._verified(nm, seq, sha, bytes(blob)))
 
 
 @dataclass
@@ -267,11 +312,17 @@ class SketchCatalog:
         """Staleness diff from an already-loaded meta (no extra store
         read of the sketches table — answers call this on the row they
         just loaded)."""
-        base_seq = int(meta.get("manifest_base", 0))
-        _, ingested = _manifest_state(self.spark, self.store_path, name,
-                                      base_seq)
-        current = _current_files(table_path)
-        return len(_diff_files(current, ingested or {}, table_path, name))
+        return self._stale(name, table_path,
+                           int(meta.get("manifest_base", 0)))
+
+    def _stale(self, name: str, table_path: str, min_seq: int,
+               max_seq: int | None = None) -> int:
+        """Table files the manifest window [min_seq, max_seq] of
+        ``name`` has not ingested."""
+        _, ingested = store.read_manifest(self.store_path, name,
+                                          min_seq=min_seq, max_seq=max_seq)
+        return len(_diff_files(_current_files(table_path), ingested,
+                               table_path, name))
 
     def _entry(self, table_path: str, column: str,
                policy: str | None) -> tuple[int, dict, MultiSketch,
@@ -340,45 +391,36 @@ class SketchCatalog:
                       stale_files=stale, refreshed=refreshed,
                       sketch_bytes=part.nbytes(), extra=extra)
 
-    def _merge_fleet(self, name: str, spec: dict) -> tuple[int, MultiSketch]:
-        """(epoch, merged MultiSketch) of a committed grouped fleet:
-        winner selection and the epoch/base pins run in Spark, each
-        partition sha-verifies and merges its own batch of KB blobs
-        inside mapInPandas, and the driver folds only the per-partition
-        partials (≤ shuffle-partition count, regardless of G). At a
-        G=10^6 fleet the driver sees ~32 blobs, never the fleet."""
-        from pyspark.sql import functions as F
-
-        from . import serde
-
-        epoch, base = grouped_epoch(self.spark, self.store_path, name)
-        df = store.read_table(self.spark, self.store_path + "/sketches")
-        if df is None or epoch is None:
+    def _winner_rows(self, name: str, pins: tuple[int | None, int]):
+        """(name, seq, sha256, blob) DataFrame of a fleet's winners
+        within committed ``pins`` (epoch, base) — the reader picks the
+        keys, Spark streams exactly those blobs — and its row count."""
+        epoch, base = pins
+        if epoch is None:
             raise KeyError(f"{name} has no committed grouped epoch")
-        prefix = name + "/"
-        winners = store.winners_streaming(
-            df.filter(F.col("name").startswith(prefix))
-            .filter((F.col("seq") >= base) & (F.col("seq") <= epoch))
-        ).select("name", "blob", "sha256")
+        df, n = store.winner_rows(self.spark, self.store_path, name,
+                                  min_seq=base, max_seq=epoch)
+        return df.select("name", "seq", "sha256", "blob"), n
+
+    def _merge_fleet(self, name: str, spec: dict) -> tuple[int, MultiSketch]:
+        """(epoch, merged MultiSketch) of a committed grouped fleet: each
+        partition of the winner rows sha-verifies and merges its own
+        batch of KB blobs inside mapInPandas, and the driver folds only
+        the per-partition partials (one per scan partition, regardless
+        of G). At a G=10^6 fleet the driver sees tens of blobs, never
+        the fleet."""
+        pins = grouped_epoch(self.spark, self.store_path, name)
+        winners, _ = self._winner_rows(name, pins)
+        plen = len(name) + 1
 
         def gen(pdfs):
-            import hashlib
-
             import pandas as pd
             acc = None
-            for pdf in pdfs:
-                for nm, blob, sha in zip(pdf["name"], pdf["blob"],
-                                         pdf["sha256"]):
-                    blob = bytes(blob)
-                    digest = hashlib.sha256(blob).hexdigest()
-                    if digest != sha:
-                        raise IOError(f"sketch {nm!r} corrupt: sha "
-                                      f"{digest[:16]} != {sha[:16]}")
-                    ms = serde.loads(blob)
-                    if acc is None:
-                        acc = ms
-                    else:
-                        acc.merge(ms)
+            for _, ms in _fleet_sketches(pdfs, plen):
+                if acc is None:
+                    acc = ms
+                else:
+                    acc.merge(ms)
             if acc is not None:
                 yield pd.DataFrame({"blob": [serde.dumps_partial(acc)]})
 
@@ -389,7 +431,7 @@ class SketchCatalog:
         acc = serde.loads(partials[0])
         for blob in partials[1:]:
             acc.merge(serde.loads(blob))
-        return int(epoch), acc
+        return int(pins[0]), acc
 
     # -- answers -----------------------------------------------------------
 
@@ -702,6 +744,9 @@ class SketchCatalog:
     def _refresh_grouped(self, table_path: str, group_col: str,
                          column: str, spec: dict, *,
                          rebuild: bool = False) -> Answer:
+        if spec.get("file_index"):
+            return self._refresh_file_index(table_path, spec,
+                                            rebuild=rebuild)
         res = incremental_build_grouped(
             self.spark, table_path, group_col, column,
             _factory_from_spec(spec), store_path=self.store_path,
@@ -727,53 +772,36 @@ class SketchCatalog:
     def refresh_grouped(self, table_path: str, group_col: str,
                         column: str) -> Answer:
         spec = self._gspec(table_path, group_col, column)
-        if spec.get("file_index"):
-            return self._refresh_file_index(table_path, column, spec)
         return self._refresh_grouped(table_path, group_col, column, spec)
 
     def _gspec(self, table_path: str, group_col: str, column: str, *,
                missing_ok: bool = False) -> dict | None:
-        """Spec from a COMMITTED group row's meta (all rows of a publish
-        carry it). Pinned to the committed epoch / rebuild base exactly
+        """Spec from the COMMITTED fleet rows (every row of a publish
+        carries it), pinned to the committed epoch / rebuild base exactly
         like current_group_sketches: a crashed ``register_grouped(
         rebuild=True)`` with a CHANGED spec leaves orphan rows above the
-        committed epoch, and an unpinned max-seq read would return the
-        orphan's spec — then _part would index the wrong MultiSketch
-        part for committed-epoch sketches, and the spec-mismatch guard
-        would compare against a spec that was never committed."""
-        name = self._gname(table_path, group_col, column)
-        epoch, base = grouped_epoch(self.spark, self.store_path, name)
-        spec = None if epoch is None else self._gspec_at(name, epoch, base)
-        if spec is None:
-            if missing_ok:
-                return None
+        committed epoch, whose spec would make _part index the wrong
+        MultiSketch part and the spec-mismatch guard compare against a
+        spec that was never committed."""
+        spec = self._gspec_at_name(self._gname(table_path, group_col,
+                                               column))
+        if spec is None and not missing_ok:
             raise KeyError(
                 f"{table_path}:{group_col}:{column} has no grouped "
                 f"registration in this catalog (store: {self.store_path})")
         return spec
 
-    def _gspec_at(self, name: str, epoch: int, base: int) -> dict | None:
-        """Spec from the highest group row WITHIN the [base, epoch]
-        window — the committed spec of that epoch's lineage."""
-        from pyspark.sql import functions as F
-        df = store.read_table(self.spark, self.store_path + "/sketches")
-        rows = [] if df is None else (
-            df.filter(F.col("name").startswith(name + "/"))
-            .filter((F.col("seq") >= base) & (F.col("seq") <= epoch))
-            .orderBy(F.col("seq").desc()).limit(1)
-            .select("meta_json").collect())
-        if not rows:
-            return None
-        return json.loads(rows[0]["meta_json"]).get("catalog_spec")
+    def _gstale(self, name: str, table_path: str) -> int:
+        """Table files a fleet's committed [base, epoch] manifest window
+        has not ingested."""
+        epoch, base = grouped_epoch(self.spark, self.store_path, name)
+        return self._stale(name, table_path, base, epoch)
 
     def stale_files_grouped(self, table_path: str, group_col: str,
                             column: str) -> int:
-        name = self._gname(table_path, group_col, column)
         self._gspec(table_path, group_col, column)   # registered?
-        _, _, ingested = _grouped_manifest_state(self.spark,
-                                                 self.store_path, name)
-        current = _current_files(table_path)
-        return len(_diff_files(current, ingested or {}, table_path, name))
+        return self._gstale(self._gname(table_path, group_col, column),
+                            table_path)
 
     def _gscope(self, table_path: str, group_col: str, column: str,
                 policy: str | None) -> tuple[dict, int, bool]:
@@ -783,15 +811,8 @@ class SketchCatalog:
         single-group question, a winners DataFrame for a fleet one."""
         policy = policy or self.policy
         spec = self._gspec(table_path, group_col, column)
-        # inline the staleness diff instead of stale_files_grouped():
-        # that public method re-validates registration with a second
-        # spec read (two more store jobs) the line above already paid
-        name = self._gname(table_path, group_col, column)
-        _, _, ingested = _grouped_manifest_state(self.spark,
-                                                 self.store_path, name)
-        current = _current_files(table_path)
-        stale = len(_diff_files(current, ingested or {}, table_path,
-                                name))
+        stale = self._gstale(self._gname(table_path, group_col, column),
+                             table_path)
         refreshed = False
         if stale and policy == "refuse":
             raise StaleEntryError(
@@ -799,21 +820,9 @@ class SketchCatalog:
                 "file(s); refresh_grouped() it or answer with "
                 "policy='stale_ok'/'auto'")
         if stale and policy == "auto":
-            if spec.get("file_index"):
-                self._refresh_file_index(table_path, spec)
-            else:
-                self._refresh_grouped(table_path, group_col, column,
-                                      spec)
+            self._refresh_grouped(table_path, group_col, column, spec)
             stale, refreshed = 0, True
         return spec, stale, refreshed
-
-    def _gentry(self, table_path: str, group_col: str, column: str,
-                policy: str | None):
-        spec, stale, refreshed = self._gscope(table_path, group_col,
-                                              column, policy)
-        name = self._gname(table_path, group_col, column)
-        groups = current_group_sketches(self.spark, self.store_path, name)
-        return spec, groups, stale, refreshed
 
     def _grouped_answer(self, table_path, group_col, column, policy,
                         wanted, make, *, group=None, as_df=False):
@@ -893,15 +902,11 @@ class SketchCatalog:
 
     def _fleet_df(self, name: str, spec: dict, make, wanted):
         """(kind, DataFrame) — the fleet answer evaluated per group
-        inside mapInPandas over the committed epoch's winner rows.
-        Winner selection (store.winners_streaming — no blob shuffle) and the epoch/base pins happen
-        in Spark BEFORE any blob moves; each task then sha-verifies and
-        deserializes only its own batch's KB blobs. Driver memory is
-        flat in G."""
+        inside mapInPandas over the committed epoch's winner rows. The
+        reader picks the winners and pins before any blob moves; each
+        task then sha-verifies and deserializes only its own batch's KB
+        blobs. Driver memory is flat in G."""
         import pandas as pd
-
-        from . import serde
-        from pyspark.sql import functions as F
 
         spec_kinds = [e["kind"] for e in spec["kinds"]]
         resolved = [w for w in wanted if w in spec_kinds]
@@ -910,36 +915,20 @@ class SketchCatalog:
                 f"none of {list(wanted)} registered for this column "
                 f"(registered kinds: {spec_kinds})")
         kind, idx = resolved[0], spec_kinds.index(resolved[0])
-        epoch, base = grouped_epoch(self.spark, self.store_path, name)
-        prefix = name + "/"
-        df = store.read_table(self.spark, self.store_path + "/sketches")
-        if df is None or epoch is None:
-            raise KeyError(f"{name} has no committed grouped epoch")
-        winners = store.winners_streaming(
-            df.filter(F.col("name").startswith(prefix))
-            .filter((F.col("seq") >= base) & (F.col("seq") <= epoch))
-        ).select("name", "blob", "sha256")
+        winners, _ = self._winner_rows(
+            name, grouped_epoch(self.spark, self.store_path, name))
         row_fn = getattr(make, "df_rows",
                          lambda g, part: [(g, make(part))])
         out_schema = getattr(make, "df_schema", "group string, "
                                                 "value double")
-        plen = len(prefix)
+        cols = [c.split()[0] for c in out_schema.split(",")]
+        plen = len(name) + 1
 
         def gen(pdfs):
-            import hashlib
-            cols = [c.split()[0] for c in out_schema.split(",")]
             for pdf in pdfs:
-                rows = []
-                for nm, blob, sha in zip(pdf["name"], pdf["blob"],
-                                         pdf["sha256"]):
-                    blob = bytes(blob)
-                    digest = hashlib.sha256(blob).hexdigest()
-                    if digest != sha:
-                        raise IOError(f"sketch {nm!r} corrupt: sha "
-                                      f"{digest[:16]} != {sha[:16]}")
-                    part = serde.loads(blob).parts[idx]
-                    rows.extend(row_fn(nm[plen:], part))
-                yield pd.DataFrame(rows, columns=cols)
+                yield pd.DataFrame(
+                    [r for g, ms in _fleet_sketches([pdf], plen)
+                     for r in row_fn(g, ms.parts[idx])], columns=cols)
 
         return kind, winners.mapInPandas(gen, schema=out_schema)
 
@@ -1009,46 +998,55 @@ class SketchCatalog:
                                     _VERB_ROUTES["quantile"], make,
                                     group=group, as_df=as_df)
 
-    def _mg_part_df(self, name: str, epoch: int, base: int, spec: dict):
+    def _mg_part_df(self, name: str, pins: tuple[int, int], spec: dict):
         """(key, sketch) DataFrame of the fleet's Misra-Gries parts at a
-        committed epoch — winner selection and epoch pins in Spark,
-        MG-part extraction per batch in mapInPandas; blobs never reach
-        the driver. The input shape drift.grouped_tv_bounds wants."""
+        committed epoch — winners and pins from the reader, MG-part
+        extraction per batch in mapInPandas; blobs never reach the
+        driver. The input shape drift.grouped_tv_bounds wants."""
         import pandas as pd
 
-        from . import serde
-        from pyspark.sql import functions as F
-
-        spec_kinds = [e["kind"] for e in spec["kinds"]]
+        spec_kinds = [e["kind"] for e in (spec or {}).get("kinds", [])]
         if "mg" not in spec_kinds:
             raise KeyError(
-                f"epoch {epoch} of {name} has no 'mg' part (registered "
+                f"epoch {pins[0]} of {name} has no 'mg' part (registered "
                 f"kinds: {spec_kinds}) — grouped drift needs Misra-Gries")
         idx = spec_kinds.index("mg")
-        prefix = name + "/"
-        df = store.read_table(self.spark, self.store_path + "/sketches")
-        winners = store.winners_streaming(
-            df.filter(F.col("name").startswith(prefix))
-            .filter((F.col("seq") >= base) & (F.col("seq") <= epoch))
-        ).select("name", "blob", "sha256")
-        plen = len(prefix)
+        winners, _ = self._winner_rows(name, pins)
+        plen = len(name) + 1
 
         def gen(pdfs):
-            import hashlib
             for pdf in pdfs:
                 keys, blobs = [], []
-                for nm, blob, sha in zip(pdf["name"], pdf["blob"],
-                                         pdf["sha256"]):
-                    blob = bytes(blob)
-                    digest = hashlib.sha256(blob).hexdigest()
-                    if digest != sha:
-                        raise IOError(f"sketch {nm!r} corrupt: sha "
-                                      f"{digest[:16]} != {sha[:16]}")
-                    keys.append(nm[plen:])
-                    blobs.append(serde.loads(blob).parts[idx].to_bytes())
+                for g, ms in _fleet_sketches([pdf], plen):
+                    keys.append(g)
+                    blobs.append(ms.parts[idx].to_bytes())
                 yield pd.DataFrame({"key": keys, "sketch": blobs})
 
         return winners.mapInPandas(gen, schema="key string, sketch binary")
+
+    def _epoch_pair(self, table_path: str, group_col: str, column: str,
+                    seq_old: int, seq_new: int | None, policy):
+        """(name, stale, refreshed, old, new) for a two-epoch fleet verb:
+        ``old``/``new`` are ((epoch, base), committed spec), each pinned
+        by its own epoch's commit marker. ``seq_new`` None is the current
+        committed epoch under ``policy`` (auto folds appends first, so
+        'now' means NOW)."""
+        name = self._gname(table_path, group_col, column)
+        refreshed, stale = False, 0
+        if seq_new is None:
+            _, stale, refreshed = self._gscope(table_path, group_col,
+                                               column, policy)
+            seq_new, _ = grouped_epoch(self.spark, self.store_path, name)
+        pair = []
+        for seq in (seq_old, seq_new):
+            got = _committed(self.store_path, name, seq=seq)
+            if got is None:
+                raise KeyError(
+                    f"{table_path}:{group_col}:{column} has no committed "
+                    f"epoch {seq} (crashed-epoch orphans are not "
+                    "addressable)")
+            pair.append((got[0], got[1].get("catalog_spec")))
+        return name, stale, refreshed, pair[0], pair[1]
 
     def drift_grouped(self, table_path: str, group_col: str, column: str,
                       seq_old: int, seq_new: int | None = None, *,
@@ -1067,35 +1065,20 @@ class SketchCatalog:
         folds appends first, so 'now' means NOW)."""
         from .drift import grouped_tv_bounds
 
-        name = self._gname(table_path, group_col, column)
-        refreshed, stale = False, 0
-        if seq_new is None:
-            _, stale, refreshed = self._gscope(table_path, group_col,
-                                               column, policy)
-            seq_new, _ = grouped_epoch(self.spark, self.store_path, name)
-        from .incremental import grouped_epoch_at
-        old_epoch, old_base = grouped_epoch_at(
-            self.spark, self.store_path, name, seq_old)
-        new_epoch, new_base = grouped_epoch_at(
-            self.spark, self.store_path, name, seq_new)
-        spec_old = self._gspec_at(name, old_epoch, old_base)
-        spec_new = self._gspec_at(name, new_epoch, new_base)
-        if spec_old is None or spec_new is None:
-            raise KeyError(
-                f"{table_path}:{group_col}:{column} has no committed "
-                f"group rows for epoch {seq_old} / {seq_new}")
-        value = grouped_tv_bounds(
-            self._mg_part_df(name, old_epoch, old_base, spec_old),
-            self._mg_part_df(name, new_epoch, new_base, spec_new))
+        name, stale, refreshed, (old, spec_old), (new, spec_new) = \
+            self._epoch_pair(table_path, group_col, column, seq_old,
+                             seq_new, policy)
+        value = grouped_tv_bounds(self._mg_part_df(name, old, spec_old),
+                                  self._mg_part_df(name, new, spec_new))
         return Answer(
             value=value, kind="mg",
             contract="per group: certified envelope tv_lb <= "
             "TV(epoch_old, epoch_new) <= tv_ub (sound for any merge "
             "order; collapses to exact TV when distinct <= k)",
-            table=table_path, column=column, seq=new_epoch,
+            table=table_path, column=column, seq=new[0],
             covered_rows=-1, stale_files=stale, refreshed=refreshed,
             sketch_bytes=-1,
-            extra={"seq_old": old_epoch, "group_col": group_col,
+            extra={"seq_old": old[0], "group_col": group_col,
                    "distributed": True})
 
     def top_movers_grouped(self, table_path: str, group_col: str,
@@ -1122,24 +1105,10 @@ class SketchCatalog:
         silence is NOT stability — resolution is d_old + d_new."""
         from .drift import grouped_top_movers
         from .drift import top_movers as _tm
-        from .incremental import grouped_epoch_at
 
-        name = self._gname(table_path, group_col, column)
-        refreshed, stale = False, 0
-        if seq_new is None:
-            _, stale, refreshed = self._gscope(table_path, group_col,
-                                               column, policy)
-            seq_new, _ = grouped_epoch(self.spark, self.store_path, name)
-        old_epoch, old_base = grouped_epoch_at(
-            self.spark, self.store_path, name, seq_old)
-        new_epoch, new_base = grouped_epoch_at(
-            self.spark, self.store_path, name, seq_new)
-        spec_old = self._gspec_at(name, old_epoch, old_base)
-        spec_new = self._gspec_at(name, new_epoch, new_base)
-        if spec_old is None or spec_new is None:
-            raise KeyError(
-                f"{table_path}:{group_col}:{column} has no committed "
-                f"group rows for epoch {seq_old} / {seq_new}")
+        name, stale, refreshed, (old, spec_old), (new, spec_new) = \
+            self._epoch_pair(table_path, group_col, column, seq_old,
+                             seq_new, policy)
         contract = ("per group: certified shifts only — "
                     "|p_new - p_old| lower bound positive; magnitudes "
                     "are lower bounds, silence is not stability")
@@ -1147,8 +1116,7 @@ class SketchCatalog:
         if group is not None:
             g = str(group)
             pair = []
-            for spec, epoch, base in ((spec_old, old_epoch, old_base),
-                                      (spec_new, new_epoch, new_base)):
+            for spec, (epoch, base) in ((spec_old, old), (spec_new, new)):
                 got = store.load_group_sketches(
                     self.spark, self.store_path, name,
                     max_seq=epoch, min_seq=base, groups=[g])
@@ -1163,22 +1131,21 @@ class SketchCatalog:
             movers = _tm(pair[0], pair[1], limit=limit)
             return Answer(
                 value=movers, kind="mg", contract=contract,
-                table=table_path, column=column, seq=new_epoch,
+                table=table_path, column=column, seq=new[0],
                 covered_rows=-1, stale_files=stale, refreshed=refreshed,
                 sketch_bytes=pair[0].nbytes() + pair[1].nbytes(),
-                extra={"seq_old": old_epoch, "group": g,
+                extra={"seq_old": old[0], "group": g,
                        "group_col": group_col})
 
-        value = grouped_top_movers(
-            self._mg_part_df(name, old_epoch, old_base, spec_old),
-            self._mg_part_df(name, new_epoch, new_base, spec_new),
-            limit=limit)
+        value = grouped_top_movers(self._mg_part_df(name, old, spec_old),
+                                   self._mg_part_df(name, new, spec_new),
+                                   limit=limit)
         return Answer(
             value=value, kind="mg", contract=contract,
-            table=table_path, column=column, seq=new_epoch,
+            table=table_path, column=column, seq=new[0],
             covered_rows=-1, stale_files=stale, refreshed=refreshed,
             sketch_bytes=-1,
-            extra={"seq_old": old_epoch, "group_col": group_col,
+            extra={"seq_old": old[0], "group_col": group_col,
                    "distributed": True})
 
     # -- weighted-sample entries --------------------------------------------
@@ -1448,9 +1415,8 @@ class SketchCatalog:
     def _gspec_at_name(self, name: str) -> dict | None:
         """Committed spec of an arbitrary grouped lineage name (shared
         by token fleets and sample fleets)."""
-        epoch, base = grouped_epoch(self.spark, self.store_path, name)
-        return None if epoch is None else self._gspec_at(name, epoch,
-                                                         base)
+        got = _committed(self.store_path, name)
+        return None if got is None else got[1].get("catalog_spec")
 
     def subset_sum_grouped(self, table_path: str, group_col: str,
                            key_col: str, weight_col: str, pred=None, *,
@@ -1534,46 +1500,27 @@ class SketchCatalog:
         scanned. ``Answer.value`` is a lazy DataFrame (key, status)
         with status in {'appeared', 'disappeared'} — empty when the
         fleet membership is unchanged."""
-        from pyspark.sql import functions as F
+        name, stale, refreshed, (old, _), (new, _) = self._epoch_pair(
+            table_path, group_col, column, seq_old, seq_new, policy)
 
-        from .incremental import grouped_epoch_at
+        def keys_at(pins):
+            keys, _ = store.winner_keys(self.store_path, name,
+                                        min_seq=pins[1], max_seq=pins[0])
+            return {n[len(name) + 1:] for n in keys["name"].to_pylist()}
 
-        name = self._gname(table_path, group_col, column)
-        refreshed, stale = False, 0
-        if seq_new is None:
-            _, stale, refreshed = self._gscope(table_path, group_col,
-                                               column, policy)
-            seq_new, _ = grouped_epoch(self.spark, self.store_path, name)
-        old_epoch, old_base = grouped_epoch_at(
-            self.spark, self.store_path, name, seq_old)
-        new_epoch, new_base = grouped_epoch_at(
-            self.spark, self.store_path, name, seq_new)
-
-        def keys_at(epoch, base):
-            df = store.read_table(self.spark,
-                                  self.store_path + "/sketches")
-            prefix = name + "/"
-            return (df.filter(F.col("name").startswith(prefix))
-                    .filter((F.col("seq") >= base)
-                            & (F.col("seq") <= epoch))
-                    .select(F.expr(f"substring(name, {len(prefix) + 1})")
-                            .alias("key"))
-                    .distinct())
-
-        old_keys = keys_at(old_epoch, old_base)
-        new_keys = keys_at(new_epoch, new_base)
-        appeared = (new_keys.join(old_keys, "key", "left_anti")
-                    .withColumn("status", F.lit("appeared")))
-        gone = (old_keys.join(new_keys, "key", "left_anti")
-                .withColumn("status", F.lit("disappeared")))
+        old_keys, new_keys = keys_at(old), keys_at(new)
+        rows = ([(k, "appeared") for k in sorted(new_keys - old_keys)]
+                + [(k, "disappeared") for k in sorted(old_keys - new_keys)])
         return Answer(
-            value=appeared.unionByName(gone), kind="metadata",
+            value=self.spark.createDataFrame(rows,
+                                             "key string, status string"),
+            kind="metadata",
             contract="exact: committed row-name set difference between "
                      "the two pinned epochs",
-            table=table_path, column=column, seq=new_epoch,
+            table=table_path, column=column, seq=new[0],
             covered_rows=-1, stale_files=stale, refreshed=refreshed,
             sketch_bytes=0,
-            extra={"seq_old": old_epoch, "group_col": group_col,
+            extra={"seq_old": old[0], "group_col": group_col,
                    "distributed": True})
 
     # -- per-file data-skipping index ---------------------------------------
@@ -1720,34 +1667,15 @@ class SketchCatalog:
         cidx = spec_kinds.index("cm") if "cm" in spec_kinds else -1
         fpr = spec["kinds"][bidx]["params"]["fpr"]
         epoch, base = grouped_epoch(self.spark, self.store_path, name)
-        from pyspark.sql import functions as F
-
-        from . import serde
-        df = store.read_table(self.spark, self.store_path + "/sketches")
-        if df is None or epoch is None:
-            raise KeyError(f"{name} has no committed epoch")
-        prefix = name + "/"
-        winners = store.winners_streaming(
-            df.filter(F.col("name").startswith(prefix))
-            .filter((F.col("seq") >= base) & (F.col("seq") <= epoch))
-        ).select("name", "blob", "sha256")
-        plen = len(prefix)
+        winners, total = self._winner_rows(name, (epoch, base))
+        plen = len(name) + 1
         karr = np.asarray(list(keys), dtype=np.int64)
 
         def gen(pdfs):
-            import hashlib
-
             import pandas as pd
             for pdf in pdfs:
                 out_k, out_f, out_u = [], [], []
-                for nm, blob, sha in zip(pdf["name"], pdf["blob"],
-                                         pdf["sha256"]):
-                    blob = bytes(blob)
-                    digest = hashlib.sha256(blob).hexdigest()
-                    if digest != sha:
-                        raise IOError(f"sketch {nm!r} corrupt: sha "
-                                      f"{digest[:16]} != {sha[:16]}")
-                    ms = serde.loads(blob)
+                for f, ms in _fleet_sketches([pdf], plen):
                     mask = ms.parts[bidx].contains_batch(karr)
                     if mask.any():
                         hits = karr[mask]
@@ -1756,7 +1684,7 @@ class SketchCatalog:
                                else np.full(hits.shape, -1,
                                             dtype=np.int64))
                         out_k.extend(int(h) for h in hits)
-                        out_f.extend([nm[plen:]] * len(hits))
+                        out_f.extend([f] * len(hits))
                         out_u.extend(int(u) for u in ubs)
                 yield pd.DataFrame({"key": out_k, "file": out_f,
                                     "count_ub": out_u})
@@ -1773,13 +1701,6 @@ class SketchCatalog:
                           refreshed=refreshed, sketch_bytes=-1,
                           extra={"n_keys": int(karr.shape[0]),
                                  "distributed": True})
-        # fleet size from the column-pruned frame (distinct committed
-        # names) — evaluating `winners` again would re-run the winner
-        # join just to count rows
-        total = (df.filter(F.col("name").startswith(prefix))
-                 .filter((F.col("seq") >= base)
-                         & (F.col("seq") <= epoch))
-                 .select("name").distinct().count())
         value: dict = {int(k): [] for k in karr}
         for r in probe.collect():
             value[int(r["key"])].append((r["file"], int(r["count_ub"])))
@@ -1927,58 +1848,25 @@ class SketchCatalog:
 
     def entries(self) -> list[dict]:
         """Every registered (table, column) — global entries AND grouped
-        fleets (one row per fleet, not per group): spec, seq, covered
-        rows and current staleness. Store-metadata read only (no table
-        scans)."""
-        df = store.read_table(self.spark, self.store_path + "/sketches")
-        if df is None:
-            return []
-        from pyspark.sql import functions as F
-        # grouped rows are "catalogg-<hash>/<group>"; collapse a fleet
-        # to its name prefix so one registration lists once
-        named = df.withColumn(
-            "entry", F.when(F.col("name").startswith("catalogg-"),
-                            F.split(F.col("name"), "/").getItem(0))
-                      .otherwise(F.col("name")))
-        rows = (named.filter(F.col("name").startswith("catalog/")
-                             | F.col("name").startswith("catalogg-"))
-                .groupBy("entry")
-                .agg(F.max(F.struct("seq", "meta_json")).alias("w"),
-                     F.count("*").alias("n_rows_store"))
-                .select("entry", "w.seq", "w.meta_json").collect())
+        fleets (one row per fleet, not per group, at its committed
+        epoch): spec, seq, covered rows and current staleness.
+        Store-metadata read only (no table scans)."""
         out = []
-        for r in sorted(rows, key=lambda r: r["entry"]):
-            meta = json.loads(r["meta_json"])
-            if "catalog_spec" not in meta:
-                continue
+        for name, seq, meta in _registrations(self.store_path):
             spec = meta["catalog_spec"]
-            if meta.get("group_col") is not None:
-                # the max-seq row of a fleet may be an uncommitted
-                # orphan with a CHANGED spec; identity fields (table,
-                # cols) are safe — the name hash binds them — but the
-                # kind list must come from the committed epoch
-                committed = self._gspec(meta["table_path"],
-                                        meta["group_col"],
-                                        meta["column"], missing_ok=True)
-                if committed is None:
-                    continue       # nothing committed yet: not listable
-                spec = committed
-            kinds = (["psample"] if "sample" in spec
-                     else [k["kind"] for k in spec["kinds"]])
-            e = {"name": r["entry"], "seq": int(r["seq"]),
+            e = {"name": name, "seq": seq,
                  "table_path": meta["table_path"],
                  "column": meta["column"],
                  "group_col": meta.get("group_col"),
-                 "kinds": kinds,
+                 "kinds": (["psample"] if "sample" in spec
+                           else [k["kind"] for k in spec["kinds"]]),
                  "file_index": bool(spec.get("file_index")),
                  "covered_rows": int(meta.get("table_rows", -1))}
             try:
-                if e["group_col"] is not None:
-                    e["stale_files"] = self.stale_files_grouped(
-                        e["table_path"], e["group_col"], e["column"])
-                else:
-                    e["stale_files"] = self.stale_files(e["table_path"],
-                                                        e["column"])
+                e["stale_files"] = (
+                    self._stale_from(name, meta, e["table_path"])
+                    if e["group_col"] is None
+                    else self._gstale(name, e["table_path"]))
             except (KeyError, IOError):
                 e["stale_files"] = -1   # table moved/deleted
             out.append(e)

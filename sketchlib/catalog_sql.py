@@ -12,18 +12,14 @@ and be answered from KB-scale sketch blobs the store already holds —
 never a table scan. This mirrors how ``spark_build.register_sql_udfs``
 exposes broadcast probes, but instead of freezing one sketch at
 registration time, each call resolves the CURRENT winning epoch of the
-named catalog entry at execution time:
-
-- the UDF executes on executors with no SparkSession, so resolution
-  reads the store's parquet directly with pyarrow (KB winner rows; the
-  ``name`` equality predicate prunes row groups);
-- winner selection is the store's rule (highest seq, sha tie-break) and
-  blobs are sha-verified before deserialization, exactly like
-  store.load_sketch;
-- results are cached per (store, entry) keyed by a listing fingerprint
-  of the store directory, so repeated calls after an unchanged store
-  never re-read a blob, while any publish (new epoch, compaction)
-  invalidates the cache on the next call.
+named catalog entry at execution time, through the store's one reader:
+the functions execute in Python workers with no SparkSession, and
+``store.read_winner`` / ``read_epoch`` / ``load_group_sketches`` need
+none. Winner rule, commit-marker pins, sha verification and the
+fingerprint-keyed cache are therefore the store's, shared with the
+driver verbs — a repeated call against an unchanged store costs a
+directory listing (plus a read of the commit markers for a fleet), and
+any publish or compaction re-resolves.
 
 Staleness contract: the SQL surface answers from the LAST PUBLISHED
 epoch — the ``stale_ok`` policy, reported nowhere because a SELECT must
@@ -43,261 +39,68 @@ contracts.
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
-
 import numpy as np
 import pandas as pd
 
-from . import serde
-
-# (store_path, name) -> (listing fingerprint, MultiSketch, meta dict).
-# FIFO-capped so long sessions with many entries don't pin old fleets.
-_ENTRY_CACHE: dict[tuple, tuple] = {}
-_ENTRY_CACHE_MAX = 64
+from . import serde, store
+from .catalog import SketchCatalog, _committed, _registrations
 
 
-def _entry_name(table_path: str, column: str) -> str:
-    """Mirror of SketchCatalog._name — the global-entry store name."""
-    key = hashlib.sha256(
-        os.path.abspath(table_path).encode()).hexdigest()[:12]
-    return f"catalog/{key}/{column}"
+def _load(store_path: str, name: str, missing: str, **window):
+    """(sketch, meta) of ``name``'s winner — the caller's own copy."""
+    row = store.read_winner(store_path, name, **window)
+    if row is None:
+        raise KeyError(missing)
+    return serde.loads(row["blob"]), row["meta"]
 
 
-def _group_entry_name(table_path: str, group_col: str,
-                      column: str) -> str:
-    """Mirror of SketchCatalog._gname — the grouped-fleet name prefix."""
-    key = hashlib.sha256(
-        f"{os.path.abspath(table_path)}|{group_col}|{column}"
-        .encode()).hexdigest()[:16]
-    return f"catalogg-{key}"
-
-
-def _fingerprint(path: str) -> tuple:
-    """(path, size) listing of a store table directory — cheap cache
-    key: any publish/compaction changes the file set."""
-    import pyarrow.fs as pafs
-    fs = pafs.LocalFileSystem()
-    try:
-        infos = fs.get_file_info(pafs.FileSelector(path, recursive=True))
-    except FileNotFoundError:
-        return ()
-    return tuple(sorted((i.path, i.size or 0) for i in infos
-                        if i.type == pafs.FileType.File))
-
-
-def _read_rows(path: str, filt, columns):
-    """Filtered pyarrow read of a store parquet table (row-group pruned
-    by the predicate); [] when the table doesn't exist yet."""
-    import pyarrow.dataset as ds
-    if not os.path.isdir(path):
-        return []
-    t = ds.dataset(path, format="parquet").to_table(
-        filter=filt, columns=columns)
-    return t.to_pylist()
-
-
-def _pick_winner(rows):
-    """The store's winner rule: highest (seq, sha256)."""
-    return max(rows, key=lambda r: (int(r["seq"]), r["sha256"]))
-
-
-def _loads_verified(name: str, row) -> object:
-    blob = bytes(row["blob"])
-    digest = hashlib.sha256(blob).hexdigest()
-    if digest != row["sha256"]:
-        raise IOError(f"sketch {name!r} seq {row['seq']} corrupt: sha "
-                      f"{digest[:16]} != {row['sha256'][:16]}")
-    return serde.loads(blob)
-
-
-def _cache_get(key: tuple, fp: tuple):
-    hit = _ENTRY_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1], hit[2]
-    return None
-
-
-def _cache_put(key: tuple, fp: tuple, ms, meta) -> None:
-    while len(_ENTRY_CACHE) >= _ENTRY_CACHE_MAX:
-        # default=None: concurrent driver threads may evict the same
-        # oldest key; a bare pop would KeyError on the loser
-        _ENTRY_CACHE.pop(next(iter(_ENTRY_CACHE)), None)
-    _ENTRY_CACHE[key] = (fp, ms, meta)
+def _pins(store_path: str, prefix: str,
+          seq: int | None = None) -> tuple[int, int]:
+    pins = store.read_epoch(store_path, prefix, seq=seq)
+    if pins is None:
+        raise KeyError(f"{prefix!r} has no committed "
+                       + ("grouped epoch" if seq is None else f"epoch {seq}")
+                       + f" in {store_path}")
+    return pins
 
 
 def _resolve(store_path: str, table_path: str, column: str,
-             wanted: tuple):
-    """(part, meta) for the winning epoch of a GLOBAL catalog entry,
-    executor-side."""
-    import pyarrow.dataset as ds
-    name = _entry_name(table_path, column)
-    fp = _fingerprint(store_path + "/sketches")
-    hit = _cache_get((store_path, name), fp)
-    if hit is None:
-        rows = _read_rows(store_path + "/sketches",
-                          ds.field("name") == name,
-                          ["seq", "blob", "sha256", "meta_json"])
-        if not rows:
-            raise KeyError(
-                f"{table_path}:{column} is not registered in the catalog "
-                f"store {store_path} (SQL functions answer from published "
-                "epochs; register() it first)")
-        win = _pick_winner(rows)
-        ms = _loads_verified(name, win)
-        meta = json.loads(win["meta_json"])
-        _cache_put((store_path, name), fp, ms, meta)
-    else:
-        ms, meta = hit
+             wanted: tuple, seq: int | None = None):
+    """(part, meta) for the winning epoch of a GLOBAL catalog entry, or
+    its epoch ``seq``."""
+    missing = (f"{table_path}:{column} is not registered in the catalog "
+               f"store {store_path} (SQL functions answer from published "
+               "epochs; register() it first)" if seq is None else
+               f"{table_path}:{column} has no epoch {seq} in "
+               f"{store_path} (pruned or never published)")
+    ms, meta = _load(store_path, SketchCatalog._name(table_path, column),
+                     missing, seq=seq)
     return _part_of(ms, meta, wanted, table_path, column)
-
-
-def _grouped_pins(store_path: str, name: str) -> tuple[int, int]:
-    """(committed epoch, base) of a grouped fleet from its commit
-    markers in the ingested/ manifest — pyarrow mirror of
-    incremental._grouped_manifest_state's marker logic."""
-    import pyarrow.dataset as ds
-    rows = _read_rows(store_path + "/ingested",
-                      (ds.field("name") == name) & (ds.field("file") == ""),
-                      ["seq", "file_size"])
-    if not rows:
-        raise KeyError(f"{name!r} has no committed grouped epoch in "
-                       f"{store_path}")
-    epoch, base = max((int(r["seq"]), int(r["file_size"])) for r in rows)
-    return epoch, max(base, 0)
 
 
 def _resolve_group(store_path: str, table_path: str, group_col: str,
-                   column: str, group: str, wanted: tuple):
-    """(part, meta) for ONE committed group row of a fleet — exactly one
-    winner row is read, never the fleet."""
-    import pyarrow.dataset as ds
-    prefix = _group_entry_name(table_path, group_col, column)
-    row_name = f"{prefix}/{group}"
-    fp = _fingerprint(store_path + "/sketches") + \
-        _fingerprint(store_path + "/ingested")
-    hit = _cache_get((store_path, row_name), fp)
-    if hit is None:
-        epoch, base = _grouped_pins(store_path, prefix)
-        rows = _read_rows(
-            store_path + "/sketches",
-            (ds.field("name") == row_name)
-            & (ds.field("seq") >= base) & (ds.field("seq") <= epoch),
-            ["seq", "blob", "sha256", "meta_json"])
-        if not rows:
-            raise KeyError(
-                f"group {group!r} has no committed sketch under "
-                f"{table_path}:{group_col}:{column} in {store_path}")
-        win = _pick_winner(rows)
-        ms = _loads_verified(row_name, win)
-        meta = json.loads(win["meta_json"])
-        _cache_put((store_path, row_name), fp, ms, meta)
-    else:
-        ms, meta = hit
+                   column: str, group: str, wanted: tuple,
+                   seq: int | None = None):
+    """(part, meta) for ONE committed group row of a fleet — within the
+    committed epoch's pins, or those of the committed epoch ``seq``;
+    exactly one winner row is read, never the fleet."""
+    prefix = SketchCatalog._gname(table_path, group_col, column)
+    epoch, base = _pins(store_path, prefix, seq)
+    ms, meta = _load(store_path, f"{prefix}/{group}",
+                     f"group {group!r} has no committed sketch under "
+                     f"{table_path}:{group_col}:{column} in {store_path}",
+                     min_seq=base, max_seq=epoch)
     return _part_of(ms, meta, wanted, table_path, column)
 
 
-def _grouped_pins_at(store_path: str, name: str,
-                     seq: int) -> tuple[int, int]:
-    """(epoch, base) pins for a HISTORICAL committed epoch of a grouped
-    fleet — pyarrow mirror of incremental.grouped_epoch_at: the commit
-    marker at ``seq`` carries its lineage's base in file_size; crashed-
-    epoch orphans are not addressable."""
-    import pyarrow.dataset as ds
-    rows = _read_rows(store_path + "/ingested",
-                      (ds.field("name") == name)
-                      & (ds.field("file") == "")
-                      & (ds.field("seq") == int(seq)),
-                      ["file_size"])
-    if not rows:
-        raise KeyError(f"{name!r} has no committed epoch {seq} in "
-                       f"{store_path}")
-    return int(seq), max(int(rows[0]["file_size"]), 0)
-
-
-def _resolve_group_at(store_path: str, table_path: str, group_col: str,
-                      column: str, group: str, seq: int, wanted: tuple):
-    """(part, meta) for ONE committed group row at a PINNED epoch —
-    the group's winner within [base_at_seq, seq]; exactly one store
-    row is read."""
-    import pyarrow.dataset as ds
-    prefix = _group_entry_name(table_path, group_col, column)
-    row_name = f"{prefix}/{group}"
-    epoch, base = _grouped_pins_at(store_path, prefix, seq)
-    fp = _fingerprint(store_path + "/sketches") + \
-        _fingerprint(store_path + "/ingested")
-    key = (store_path, row_name, int(seq))
-    hit = _cache_get(key, fp)
-    if hit is None:
-        rows = _read_rows(
-            store_path + "/sketches",
-            (ds.field("name") == row_name)
-            & (ds.field("seq") >= base) & (ds.field("seq") <= epoch),
-            ["seq", "blob", "sha256", "meta_json"])
-        if not rows:
-            raise KeyError(
-                f"group {group!r} has no committed sketch at epoch "
-                f"{seq} under {table_path}:{group_col}:{column}")
-        win = _pick_winner(rows)
-        ms = _loads_verified(row_name, win)
-        meta = json.loads(win["meta_json"])
-        _cache_put(key, fp, ms, meta)
-    else:
-        ms, meta = hit
-    return _part_of(ms, meta, wanted, table_path, column)
-
-
-def _resolve_at(store_path: str, table_path: str, column: str,
-                seq: int, wanted: tuple):
-    """(part, meta) for a PINNED epoch of a global catalog entry —
-    exact-seq row, sha tie-break, mirroring store.latest_sketch(seq=)."""
-    import pyarrow.dataset as ds
-    name = _entry_name(table_path, column)
-    fp = _fingerprint(store_path + "/sketches")
-    key = (store_path, name, int(seq))
-    hit = _cache_get(key, fp)
-    if hit is None:
-        rows = _read_rows(store_path + "/sketches",
-                          (ds.field("name") == name)
-                          & (ds.field("seq") == int(seq)),
-                          ["seq", "blob", "sha256", "meta_json"])
-        if not rows:
-            raise KeyError(
-                f"{table_path}:{column} has no epoch {seq} in "
-                f"{store_path} (pruned or never published)")
-        win = _pick_winner(rows)
-        ms = _loads_verified(name, win)
-        meta = json.loads(win["meta_json"])
-        _cache_put(key, fp, ms, meta)
-    else:
-        ms, meta = hit
-    return _part_of(ms, meta, wanted, table_path, column)
-
-
-def _fleet_winner_rows(store_path: str, prefix: str,
-                       columns: list[str]):
-    """Committed winner row per group of a fleet: the name-RANGE
-    predicate ``prefix + '/' < name < prefix + '0'`` ('0' is the code
-    point after '/') pushes the prefix match into the parquet scan, so
-    only this fleet's rows are materialized; the [base, epoch] window
-    then excludes crashed orphans and pre-rebuild dead groups, and the
-    store's (seq, sha256) winner rule picks one row per name."""
-    import pyarrow.dataset as ds
-    epoch, base = _grouped_pins(store_path, prefix)
-    rows = _read_rows(
-        store_path + "/sketches",
-        (ds.field("name") > prefix + "/")
-        & (ds.field("name") < prefix + "0")
-        & (ds.field("seq") >= base) & (ds.field("seq") <= epoch),
-        columns)
-    winners: dict = {}
-    for r in rows:
-        cur = winners.get(r["name"])
-        if cur is None or (int(r["seq"]), r["sha256"]) > \
-                (int(cur["seq"]), cur["sha256"]):
-            winners[r["name"]] = r
-    return epoch, winners
+def _committed_fleet(store_path: str, prefix: str, missing: str):
+    """(committed {group: sketch}, committed meta) of a whole fleet."""
+    got = _committed(store_path, prefix)
+    if got is None:
+        raise KeyError(missing)
+    (epoch, base), meta = got
+    return store.load_group_sketches(None, store_path, prefix,
+                                     max_seq=epoch, min_seq=base), meta
 
 
 def _resolve_merged(store_path: str, table_path: str, group_col: str,
@@ -305,35 +108,17 @@ def _resolve_merged(store_path: str, table_path: str, group_col: str,
     """(part, meta) of the MERGED fleet — every committed group row
     folded into one MultiSketch (SQL twin of the Python verbs'
     ``via=``; single-task evaluation, so the Python path is the
-    10^6-group shape). Cached per store fingerprint like the entry
-    resolvers; the spec comes from the highest winner row, i.e. the
-    committed epoch's lineage, mirroring SketchCatalog._gspec_at."""
-    prefix = _group_entry_name(table_path, group_col, column)
-    fp = _fingerprint(store_path + "/sketches") + \
-        _fingerprint(store_path + "/ingested")
-    key = (store_path, prefix, "merged")
-    hit = _cache_get(key, fp)
-    if hit is None:
-        _, winners = _fleet_winner_rows(
-            store_path, prefix, ["name", "seq", "blob", "sha256",
-                                 "meta_json"])
-        if not winners:
-            raise KeyError(
-                f"{table_path}:{group_col}:{column} has no committed "
-                f"grouped registration in {store_path}")
-        ms = None
-        for nm in sorted(winners):
-            m = _loads_verified(nm, winners[nm])
-            if ms is None:
-                ms = m
-            else:
-                ms.merge(m)
-        spec_row = max(winners.values(),
-                       key=lambda r: (int(r["seq"]), r["sha256"]))
-        meta = json.loads(spec_row["meta_json"])
-        _cache_put(key, fp, ms, meta)
-    else:
-        ms, meta = hit
+    10^6-group shape). The spec is the committed epoch's."""
+    groups, meta = _committed_fleet(
+        store_path, SketchCatalog._gname(table_path, group_col, column),
+        f"{table_path}:{group_col}:{column} has no committed grouped "
+        f"registration in {store_path}")
+    ms = None
+    for g in sorted(groups):
+        if ms is None:
+            ms = groups[g]
+        else:
+            ms.merge(groups[g])
     return _part_of(ms, meta, wanted, table_path, column)
 
 
@@ -454,24 +239,9 @@ def register_catalog_sql(spark, store_path: str, *,
                                       pattern)):
             m = ((table == t) & (key_col == kc) & (weight_col == wc)
                  & (pattern == pat))
-            name = _entry_name(t, f"{kc}~{wc}")
-            fp = _fingerprint(sp + "/sketches")
-            hit = _cache_get((sp, name), fp)
-            if hit is None:
-                import pyarrow.dataset as ds
-                rows = _read_rows(sp + "/sketches",
-                                  ds.field("name") == name,
-                                  ["seq", "blob", "sha256", "meta_json"])
-                if not rows:
-                    raise KeyError(
-                        f"{t}:({kc}, {wc}) has no sample registration "
-                        f"in {sp}")
-                win = _pick_winner(rows)
-                ps = _loads_verified(name, win)
-                meta = json.loads(win["meta_json"])
-                _cache_put((sp, name), fp, ps, meta)
-            else:
-                ps, meta = hit
+            ps, _ = _load(sp, SketchCatalog._name(t, f"{kc}~{wc}"),
+                          f"{t}:({kc}, {wc}) has no sample registration "
+                          f"in {sp}")
             out[m] = ps.estimate_subset(
                 lambda s: fnmatch.fnmatchcase(s, pat))
         return out
@@ -485,36 +255,18 @@ def register_catalog_sql(spark, store_path: str, *,
         epoch) answers the fnmatch pattern in O(k)."""
         import fnmatch
 
-        import pyarrow.dataset as ds
         out = pd.Series(np.nan, index=table.index, dtype="float64")
         for t, gc, kc, wc, g, pat in set(zip(table, gcol, key_col,
                                              weight_col, group,
                                              pattern)):
             m = ((table == t) & (gcol == gc) & (key_col == kc)
                  & (weight_col == wc) & (group == g) & (pattern == pat))
-            prefix = _group_entry_name(t, gc, f"{kc}~{wc}")
-            row_name = f"{prefix}/{g}"
-            fp = _fingerprint(sp + "/sketches") + \
-                _fingerprint(sp + "/ingested")
-            hit = _cache_get((sp, row_name), fp)
-            if hit is None:
-                epoch, base = _grouped_pins(sp, prefix)
-                rows = _read_rows(
-                    sp + "/sketches",
-                    (ds.field("name") == row_name)
-                    & (ds.field("seq") >= base)
-                    & (ds.field("seq") <= epoch),
-                    ["seq", "blob", "sha256", "meta_json"])
-                if not rows:
-                    raise KeyError(
-                        f"group {g!r} has no committed sample under "
-                        f"{t}:{gc}:({kc}, {wc}) in {sp}")
-                win = _pick_winner(rows)
-                ps = _loads_verified(row_name, win)
-                meta = json.loads(win["meta_json"])
-                _cache_put((sp, row_name), fp, ps, meta)
-            else:
-                ps, meta = hit
+            prefix = SketchCatalog._gname(t, gc, f"{kc}~{wc}")
+            epoch, base = _pins(sp, prefix)
+            ps, _ = _load(sp, f"{prefix}/{g}",
+                          f"group {g!r} has no committed sample under "
+                          f"{t}:{gc}:({kc}, {wc}) in {sp}",
+                          min_seq=base, max_seq=epoch)
             out[m] = ps.estimate_subset(
                 lambda s: fnmatch.fnmatchcase(s, pat))
         return out
@@ -646,13 +398,10 @@ def register_catalog_sql(spark, store_path: str, *,
         def eval(self, table_path: str, column: str, seq_old: int,
                  seq_new):
             from .drift import tv_bounds
-            mg_old, _ = _resolve_at(sp, table_path, column,
-                                    int(seq_old), ("mg",))
-            if seq_new is None:
-                mg_new, _ = _resolve(sp, table_path, column, ("mg",))
-            else:
-                mg_new, _ = _resolve_at(sp, table_path, column,
-                                        int(seq_new), ("mg",))
+            mg_old, _ = _resolve(sp, table_path, column, ("mg",),
+                                 int(seq_old))
+            mg_new, _ = _resolve(sp, table_path, column, ("mg",),
+                                 None if seq_new is None else int(seq_new))
             b = tv_bounds(mg_old, mg_new)
             yield (float(b.tv_lb), float(b.tv_ub), int(b.n_a),
                    int(b.n_b), int(b.n_candidates))
@@ -668,13 +417,10 @@ def register_catalog_sql(spark, store_path: str, *,
         def eval(self, table_path: str, column: str, seq_old: int,
                  seq_new, limit: int = 20):
             from .drift import top_movers as _tm
-            mg_old, _ = _resolve_at(sp, table_path, column,
-                                    int(seq_old), ("mg",))
-            if seq_new is None:
-                mg_new, _ = _resolve(sp, table_path, column, ("mg",))
-            else:
-                mg_new, _ = _resolve_at(sp, table_path, column,
-                                        int(seq_new), ("mg",))
+            mg_old, _ = _resolve(sp, table_path, column, ("mg",),
+                                 int(seq_old))
+            mg_new, _ = _resolve(sp, table_path, column, ("mg",),
+                                 None if seq_new is None else int(seq_new))
             for tok, p_old, p_new, lb in _tm(mg_old, mg_new,
                                              limit=int(limit)):
                 yield (int(tok), float(p_old), float(p_new), float(lb))
@@ -690,12 +436,10 @@ def register_catalog_sql(spark, store_path: str, *,
         def eval(self, table_path: str, group_col: str, column: str,
                  group: str, seq_old: int, seq_new: int):
             from .drift import tv_bounds
-            mg_old, _ = _resolve_group_at(sp, table_path, group_col,
-                                          column, group, int(seq_old),
-                                          ("mg",))
-            mg_new, _ = _resolve_group_at(sp, table_path, group_col,
-                                          column, group, int(seq_new),
-                                          ("mg",))
+            mg_old, _ = _resolve_group(sp, table_path, group_col, column,
+                                       group, ("mg",), int(seq_old))
+            mg_new, _ = _resolve_group(sp, table_path, group_col, column,
+                                       group, ("mg",), int(seq_new))
             b = tv_bounds(mg_old, mg_new)
             yield (float(b.tv_lb), float(b.tv_ub), int(b.n_a),
                    int(b.n_b), int(b.n_candidates))
@@ -710,12 +454,10 @@ def register_catalog_sql(spark, store_path: str, *,
                  group: str, seq_old: int, seq_new: int,
                  limit: int = 20):
             from .drift import top_movers as _tm
-            mg_old, _ = _resolve_group_at(sp, table_path, group_col,
-                                          column, group, int(seq_old),
-                                          ("mg",))
-            mg_new, _ = _resolve_group_at(sp, table_path, group_col,
-                                          column, group, int(seq_new),
-                                          ("mg",))
+            mg_old, _ = _resolve_group(sp, table_path, group_col, column,
+                                       group, ("mg",), int(seq_old))
+            mg_new, _ = _resolve_group(sp, table_path, group_col, column,
+                                       group, ("mg",), int(seq_new))
             for tok, p_old, p_new, lb in _tm(mg_old, mg_new,
                                              limit=int(limit)):
                 yield (int(tok), float(p_old), float(p_new), float(lb))
@@ -730,18 +472,14 @@ def register_catalog_sql(spark, store_path: str, *,
         blob is deserialized."""
         def eval(self, table_path: str, group_col: str, column: str,
                  seq_old: int, seq_new: int):
-            import pyarrow.dataset as ds
-            prefix = _group_entry_name(table_path, group_col, column)
-            plen = len(prefix) + 1
+            prefix = SketchCatalog._gname(table_path, group_col, column)
 
             def keys_at(seq):
-                epoch, base = _grouped_pins_at(sp, prefix, int(seq))
-                rows = _read_rows(
-                    sp + "/sketches",
-                    (ds.field("seq") >= base)
-                    & (ds.field("seq") <= epoch), ["name"])
-                return {r["name"][plen:] for r in rows
-                        if r["name"].startswith(prefix + "/")}
+                epoch, base = _pins(sp, prefix, int(seq))
+                keys, _ = store.winner_keys(sp, prefix, min_seq=base,
+                                            max_seq=epoch)
+                return {n[len(prefix) + 1:]
+                        for n in keys["name"].to_pylist()}
 
             old_k, new_k = keys_at(seq_old), keys_at(seq_new)
             for k in sorted(new_k - old_k):
@@ -776,110 +514,33 @@ def register_catalog_sql(spark, store_path: str, *,
         twin of ``cat.entries()``; grouped kind lists are pinned to the
         committed epoch exactly like the Python verb."""
         def eval(self):
-            store_path = sp
-            rows = _read_rows(store_path + "/sketches", None,
-                              ["name", "seq", "meta_json"])
-            best: dict = {}
-            for r in rows:
-                nm = r["name"]
-                if nm.startswith("catalogg-"):
-                    entry = nm.split("/", 1)[0]
-                elif nm.startswith("catalog/"):
-                    entry = nm
-                else:
-                    continue
-                cur = best.get(entry)
-                if cur is None or int(r["seq"]) > int(cur["seq"]):
-                    best[entry] = r
-            for entry in sorted(best):
-                meta = json.loads(best[entry]["meta_json"])
-                if "catalog_spec" not in meta:
-                    continue
-                spec, seq = meta["catalog_spec"], int(best[entry]["seq"])
-                if meta.get("group_col") is not None:
-                    # pin the kind list to the committed epoch: the
-                    # max-seq fleet row may be a crashed publish's
-                    # orphan with a CHANGED spec
-                    try:
-                        epoch, base = _grouped_pins(store_path, entry)
-                    except KeyError:
-                        continue      # nothing committed: not listable
-                    cands = [r for r in rows
-                             if r["name"].startswith(entry + "/")
-                             and base <= int(r["seq"]) <= epoch]
-                    if not cands:
-                        continue
-                    win = max(cands, key=lambda r: int(r["seq"]))
-                    cspec = json.loads(win["meta_json"]).get(
-                        "catalog_spec")
-                    if cspec is None:
-                        continue
-                    spec, seq = cspec, epoch
+            for name, seq, meta in _registrations(sp):
+                spec = meta["catalog_spec"]
                 kinds = ("psample" if "sample" in spec else
                          ",".join(k["kind"] for k in spec["kinds"]))
-                yield (entry, meta["table_path"], meta["column"],
+                yield (name, meta["table_path"], meta["column"],
                        meta.get("group_col"), kinds, seq)
 
     @udtf(returnType="verb string, kind string, available boolean, "
                      "preference string, seq bigint, kinds string")
     class Explain:
-        """SQL twin of ``cat.explain()``: one row per catalog verb with
-        the registered kind that would serve it — resolved through the
-        SAME ``_VERB_ROUTES`` preference table the Python answer methods
-        route through, so the report can never disagree with routing.
-        Pass ``group_col=''`` for a global entry (all verbs), a real
-        group column for a fleet (grouped verb subset, spec pinned to
-        the committed epoch). Store-metadata reads only — no blob is
-        deserialized, no table is scanned. Freshness policy enforcement
-        stays with the answer verbs; use the Python ``explain()`` for
-        the stale-file count."""
+        """SQL twin of ``cat.explain()``: one row per route of the
+        Python ``explain()`` itself (which needs no SparkSession), so
+        the two reports can never disagree — each verb with the
+        registered kind that would serve it. Pass ``group_col=''`` for
+        a global entry (all verbs), a real group column for a fleet
+        (grouped verb subset, spec pinned to the committed epoch).
+        Store-metadata reads only — no blob is deserialized, no table
+        is scanned. Use the Python ``explain()`` for the stale-file
+        count."""
         def eval(self, table_path: str, column: str,
                  group_col: str = ""):
-            import pyarrow.dataset as ds
-
-            from .catalog import _VERB_ROUTES, SketchCatalog
-            store_path = sp
-            if group_col:
-                entry = _group_entry_name(table_path, group_col, column)
-                epoch, base = _grouped_pins(store_path, entry)
-                rows = _read_rows(
-                    store_path + "/sketches",
-                    (ds.field("seq") >= base)
-                    & (ds.field("seq") <= epoch),
-                    ["name", "seq", "meta_json"])
-                cands = [r for r in rows
-                         if r["name"].startswith(entry + "/")]
-                if not cands:
-                    raise KeyError(
-                        f"{table_path}:{group_col}:{column} has no "
-                        "committed grouped registration")
-                win = max(cands, key=lambda r: int(r["seq"]))
-                spec = json.loads(win["meta_json"]).get("catalog_spec")
-                seq = int(epoch)
-                verbs = {v: _VERB_ROUTES[v]
-                         for v in SketchCatalog._GROUPED_VERBS}
-            else:
-                entry = _entry_name(table_path, column)
-                rows = _read_rows(store_path + "/sketches",
-                                  ds.field("name") == entry,
-                                  ["seq", "meta_json"])
-                if not rows:
-                    raise KeyError(
-                        f"{table_path}:{column} is not registered")
-                win = max(rows, key=lambda r: int(r["seq"]))
-                spec = json.loads(win["meta_json"]).get("catalog_spec")
-                seq = int(win["seq"])
-                verbs = dict(_VERB_ROUTES)
-            if spec is None:
-                raise KeyError(f"{table_path}:{column} carries no "
-                               "catalog spec")
-            kinds = [e["kind"] for e in spec["kinds"]]
-            kinds_s = ",".join(kinds)
-            for verb in sorted(verbs):
-                wanted = verbs[verb]
-                served = next((w for w in wanted if w in kinds), None)
-                yield (verb, served, served is not None,
-                       ",".join(wanted), seq, kinds_s)
+            ex = SketchCatalog(None, sp).explain(
+                table_path, column, group_col=group_col or None)
+            kinds = ",".join(ex["kinds"])
+            for verb, r in sorted(ex["routes"].items()):
+                yield (verb, r["kind"], r["available"],
+                       ",".join(r["preference"]), ex["seq"], kinds)
 
     @udtf(returnType="file string, count_ub bigint")
     class Locate:
@@ -896,20 +557,12 @@ def register_catalog_sql(spark, store_path: str, *,
                  ngrams=None, ngram_seed: int = 1337):
             label = column if ngrams is None else \
                 f"{column}~{int(ngrams)}gram-{int(ngram_seed)}"
-            prefix = _group_entry_name(table_path, "__file__", label)
-            try:
-                _, winners = _fleet_winner_rows(
-                    sp, prefix, ["name", "seq", "blob", "sha256",
-                                 "meta_json"])
-            except KeyError:
-                winners = {}
-            if not winners:
-                raise KeyError(
-                    f"{table_path}:{column} has no committed file "
-                    f"index in {sp} (register_file_index() it first)")
-            spec_row = max(winners.values(),
-                           key=lambda r: (int(r["seq"]), r["sha256"]))
-            spec = json.loads(spec_row["meta_json"])["catalog_spec"]
+            files, meta = _committed_fleet(
+                sp, SketchCatalog._gname(table_path,
+                                         SketchCatalog._FILE_GROUP, label),
+                f"{table_path}:{column} has no committed file index in "
+                f"{sp} (register_file_index() it first)")
+            spec = meta["catalog_spec"]
             kinds = [e["kind"] for e in spec["kinds"]]
             if "bloom" not in kinds:
                 raise KeyError(
@@ -917,13 +570,13 @@ def register_catalog_sql(spark, store_path: str, *,
                     f"'bloom' kind (registered: {kinds})")
             bidx = kinds.index("bloom")
             cidx = kinds.index("cm") if "cm" in kinds else -1
-            plen, k = len(prefix) + 1, int(key)
-            for nm in sorted(winners):
-                ms = _loads_verified(nm, winners[nm])
+            k = int(key)
+            for f in sorted(files):
+                ms = files[f]
                 if ms.parts[bidx].contains(k):
                     ub = (int(ms.parts[cidx].point_query(k))
                           if cidx >= 0 else -1)
-                    yield (nm[plen:], ub)
+                    yield (f, ub)
 
     names = []
     for suffix, fn in (("count_distinct", cd), ("frequency", freq),

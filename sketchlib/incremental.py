@@ -35,10 +35,15 @@ next seq). Iceberg snapshot metadata would make this diff exact per
 commit; the file-listing manifest is the engine-portable equivalent and
 uses the identical contract (data files are immutable once committed).
 
-Driver-side cost is one file listing + one manifest read per call —
-O(#files) strings, the same order as any parquet directory scan the
-build itself must do. Concurrency contract is the store's: one writer
-per name (store.save_sketch).
+Every manifest and sketch read goes through the store's one reader
+(pyarrow, no Spark job): ``store.read_manifest`` for the ingested files
+of a window, ``store.read_epoch`` for a grouped lineage's committed
+(epoch, base) pins, ``store.read_winner`` / ``load_group_sketches`` for
+the merge base. Manifest appends are the store's durable pyarrow append
+on local stores. Driver-side cost is one file listing + one manifest
+read per call — O(#files) strings, the same order as any parquet
+directory scan the build itself must do. Concurrency contract is the
+store's: one writer per name (store.save_sketch).
 
 The module's full surface, one function per maintenance/analysis shape:
 
@@ -86,35 +91,6 @@ def _current_files(table_path: str) -> dict[str, int]:
             for f in walk_parquet_files(table_path)}
 
 
-def _read_ingested(spark: SparkSession, store_path: str):
-    """The store's ``ingested/`` manifest DataFrame, or None when no
-    manifest exists yet (store.read_table contract: only "table does
-    not exist" maps to None)."""
-    return store.read_table(spark, store_path + "/ingested")
-
-
-def _manifest_state(spark: SparkSession, store_path: str, name: str,
-                    base_seq: int) -> tuple[int | None, dict[str, int]]:
-    """(max manifest seq, {relative_path: size}) for ``name`` in ONE
-    manifest read, considering only rows at/after the last full (re)build
-    (``base_seq`` — rows below it describe a pre-rebuild table state and
-    must not poison the diff; the (re)build's own rows sit AT base_seq,
-    so the max is unaffected unless the manifest append itself is missing
-    — exactly the crash window the max is checked for). Missing manifest
-    table == nothing ingested == (None, {})."""
-    df = _read_ingested(spark, store_path)
-    if df is None:
-        return None, {}
-    rows = (df.filter((F.col("name") == name)
-                      & (F.col("seq") >= base_seq))
-            .select("seq", "file", "file_size").collect())
-    if not rows:
-        return None, {}
-    # commit-marker rows (file="") count for the max seq, never the dict
-    return (max(int(r["seq"]) for r in rows),
-            {r["file"]: int(r["file_size"]) for r in rows if r["file"]})
-
-
 def _append_manifest(spark: SparkSession, store_path: str, name: str,
                      seq: int, files: dict[str, int],
                      base_epoch: int = -1) -> None:
@@ -129,8 +105,8 @@ def _append_manifest(spark: SparkSession, store_path: str, name: str,
     # global path, which keeps its base in the published sketch's meta).
     rows = [(name, seq, "", base_epoch)]
     rows += [(name, seq, f, sz) for f, sz in sorted(files.items())]
-    (store.one_part_df(spark, rows, _MANIFEST_SCHEMA)
-     .write.mode("append").parquet(store_path + "/ingested"))
+    store._append_rows(spark, store_path + "/ingested", rows,
+                       _MANIFEST_SCHEMA)
 
 
 @dataclass
@@ -193,8 +169,12 @@ def incremental_build(spark: SparkSession, table_path: str, values_col: str,
     if prev_seq is None or rebuild:
         new = current
     else:
-        man_seq, ingested = _manifest_state(spark, store_path, name,
-                                            base_seq)
+        # manifest rows below base_seq describe a pre-rebuild table
+        # state; the (re)build's own rows sit AT base_seq, so the max is
+        # short of prev_seq only when the manifest append itself is
+        # missing — exactly the crash window checked here
+        man_seq, ingested = store.read_manifest(store_path, name,
+                                                min_seq=base_seq)
         if man_seq is None or man_seq < prev_seq:
             raise IOError(
                 f"sketch {name!r} seq {prev_seq} has no manifest rows at "
@@ -246,32 +226,6 @@ def incremental_build(spark: SparkSession, table_path: str, values_col: str,
         sketch=sketch, seq=seq, prev_seq=prev_seq, new_files=len(new),
         new_rows=res.n_rows, wall_s=time.perf_counter() - t0,
         lineage=res.lineage)
-
-
-def _grouped_manifest_state(
-        spark: SparkSession, store_path: str,
-        name: str) -> tuple[int | None, int, dict[str, int]]:
-    """(committed epoch, base epoch, ingested files) for a GROUPED
-    maintenance lineage, from the manifest alone. Commit-marker rows
-    (file="") carry the base epoch of the current lineage in file_size;
-    the highest marker seq is the committed epoch — group-sketch rows
-    published above it belong to a crashed, uncommitted epoch and are
-    ignored (retries republish at a FRESH seq, see
-    incremental_build_grouped) rather than refused."""
-    df = _read_ingested(spark, store_path)
-    if df is None:
-        return None, 0, {}
-    rows = (df.filter(F.col("name") == name)
-            .select("seq", "file", "file_size").collect())
-    markers = [(int(r["seq"]), int(r["file_size"]))
-               for r in rows if not r["file"]]
-    if not markers:
-        return None, 0, {}
-    epoch, base = max(markers)
-    base = max(base, 0)   # global-path markers write -1; grouped >= 0
-    ingested = {r["file"]: int(r["file_size"]) for r in rows
-                if r["file"] and base <= int(r["seq"]) <= epoch}
-    return epoch, base, ingested
 
 
 def _diff_files(current: dict[str, int], ingested: dict[str, int],
@@ -354,11 +308,13 @@ def incremental_build_grouped(spark: SparkSession, table_path: str,
     if "/" in name:
         raise ValueError(f"grouped sketch name may not contain '/': {name!r}")
     current = _current_files(table_path)
-    epoch, base, ingested = _grouped_manifest_state(spark, store_path, name)
+    epoch, base = grouped_epoch(spark, store_path, name)
 
     full = epoch is None or rebuild
     if not full:
-        new = _diff_files(current, ingested, table_path, name)
+        new = _diff_files(current, store.read_manifest(
+            store_path, name, min_seq=base, max_seq=epoch)[1],
+            table_path, name)
         if not new:
             return GroupedIncrementalResult(
                 sketches={}, seq=epoch, prev_seq=epoch, new_files=0,
@@ -426,8 +382,7 @@ def grouped_epoch(spark: SparkSession, store_path: str,
     lineage — the pins a correct external read needs: uncommitted orphan
     rows sit ABOVE the committed epoch, dead pre-rebuild rows BELOW the
     base. (None, 0) when nothing is committed yet."""
-    epoch, base, _ = _grouped_manifest_state(spark, store_path, name)
-    return epoch, base
+    return store.read_epoch(store_path, name) or (None, 0)
 
 
 def grouped_epoch_at(spark: SparkSession, store_path: str, name: str,
@@ -437,21 +392,17 @@ def grouped_epoch_at(spark: SparkSession, store_path: str, name: str,
     (e.g. certified drift between two published epochs). Groups
     republish only when touched, so epoch ``seq``'s winner for a group
     may sit at any seq in [base, seq]; the base comes from ``seq``'s own
-    commit marker (markers carry their lineage's base in file_size), so
-    rows from a pre-rebuild lineage that was dead at ``seq`` are
-    excluded. Raises KeyError when ``seq`` was never committed — orphan
-    publishes from crashed epochs are not addressable states."""
-    df = _read_ingested(spark, store_path)
-    rows = [] if df is None else (
-        df.filter((F.col("name") == name) & (F.col("file") == "")
-                  & (F.col("seq") == int(seq)))
-        .select("file_size").collect())
-    if not rows:
+    commit marker, so rows from a pre-rebuild lineage that was dead at
+    ``seq`` are excluded. Raises KeyError when ``seq`` was never
+    committed — orphan publishes from crashed epochs are not
+    addressable states."""
+    pins = store.read_epoch(store_path, name, seq=seq)
+    if pins is None:
         raise KeyError(
             f"{name!r} has no committed epoch {seq} (crashed-epoch "
             "orphans are not addressable; see grouped_epoch for the "
             "current committed state)")
-    return int(seq), max(int(rows[0]["file_size"]), 0)
+    return pins
 
 
 def current_group_sketches(spark: SparkSession, store_path: str,
@@ -509,7 +460,7 @@ def incremental_build_table(spark: SparkSession, table_path: str,
     t0 = time.perf_counter()
     from .spark_build import _TRIPLE_SCHEMA, build_sketch_table
     current = _current_files(table_path)
-    epoch, base, ingested = _grouped_manifest_state(spark, store_path, name)
+    epoch, base = grouped_epoch(spark, store_path, name)
 
     full = epoch is None or rebuild
     if full:
@@ -517,7 +468,9 @@ def incremental_build_table(spark: SparkSession, table_path: str,
         next_epoch = 0 if epoch is None else epoch + 1
         next_base = next_epoch
     else:
-        new = _diff_files(current, ingested, table_path, name)
+        new = _diff_files(current, store.read_manifest(
+            store_path, name, min_seq=base, max_seq=epoch)[1],
+            table_path, name)
         next_epoch, next_base = epoch + 1, base
         if not new:
             path = f"{store_path}/tables/{name}/seq={epoch}"
@@ -561,7 +514,7 @@ def prune_table_epochs(spark: SparkSession, store_path: str, name: str,
     import shutil as _shutil
     if keep < 1:
         raise ValueError("keep must be >= 1 (the committed epoch itself)")
-    epoch, _, _ = _grouped_manifest_state(spark, store_path, name)
+    epoch, _ = grouped_epoch(spark, store_path, name)
     if epoch is None:
         return []
     root = os.path.join(store_path, "tables", name)
@@ -612,7 +565,7 @@ def snapshot_diff_table(spark: SparkSession, store_path: str, name: str,
     joined diff is cached around the negativity check so the caller's
     first action doesn't recompute the shuffle; unpersist the returned
     frame when done with it."""
-    epoch, base, _ = _grouped_manifest_state(spark, store_path, name)
+    epoch, base = grouped_epoch(spark, store_path, name)
     if epoch is None:
         raise KeyError(f"no table sketch named {name!r} in {store_path}")
     if seq_new is None:

@@ -1201,6 +1201,25 @@ def test_sample_via_merged_fleet_matches_global(spark, table, tmp_path):
                        via="nope")
 
 
+def test_refresh_grouped_folds_file_index(spark, tmp_path):
+    """refresh_grouped on a file-index fleet (group column __file__)
+    folds appended files like refresh_file_index, and locate() then
+    sees the new file."""
+    _write_part(tmp_path, 0, rows=300, seed=41)
+    data = str(tmp_path / "data")
+    cat = SketchCatalog(spark, str(tmp_path / "store"))
+    cat.register_file_index(data, "tokens")
+    _write_part(tmp_path, 1, rows=300, seed=42)
+    import pyarrow.parquet as pq
+    key = int(pq.read_table(f"{data}/part1.parquet", columns=["tokens"])
+              .column(0).combine_chunks().flatten()[0].as_py())
+    ans = cat.refresh_grouped(data, SketchCatalog._FILE_GROUP, "tokens")
+    assert ans.extra["new_files"] == 1 and ans.refreshed
+    got = cat.locate(data, "tokens", key, policy="refuse")
+    assert got.extra["files_total"] == 2
+    assert "part1.parquet" in {f for f, _ in got.value}
+
+
 def test_ngram_file_index_decontamination_triage(spark, tmp_path):
     """File index over the DERIVED hashed-n-gram stream (ngrams=n):
     "which files can contain this shingle" answered from store rows —

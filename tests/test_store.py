@@ -186,8 +186,7 @@ def test_compact_store_preserves_everything(spark, tmp_path):
     from sketchlib import store
     from sketchlib.countmin import CMConfig, CountMinSketch
     from sketchlib.datagen import generate_token_table
-    from sketchlib.incremental import (_grouped_manifest_state,
-                                       incremental_build,
+    from sketchlib.incremental import (incremental_build,
                                        incremental_build_grouped,
                                        snapshot_diff)
 
@@ -201,6 +200,11 @@ def test_compact_store_preserves_everything(spark, tmp_path):
         src = str(tmp_path / "_s.parquet")
         generate_token_table(src, rows=rows, seed=seed, dist="zipf")
         shutil.move(src, os.path.join(data, name))
+
+    def gstate():
+        epoch, base = store.read_epoch(st, "g")
+        return epoch, base, store.read_manifest(st, "g", min_seq=base,
+                                                max_seq=epoch)
 
     _part("p0.parquet", 600, 1)
     incremental_build(spark, data, "tokens", fac, store_path=st, name="cm")
@@ -216,7 +220,7 @@ def test_compact_store_preserves_everything(spark, tmp_path):
         "pinned": store.load_sketch(spark, st, "cm", seq=0).to_bytes(),
         "groups": {g: s.to_bytes() for g, s in
                    store.load_group_sketches(spark, st, "g").items()},
-        "gstate": _grouped_manifest_state(spark, st, "g"),
+        "gstate": gstate(),
         "diff": snapshot_diff(spark, st, "cm", seq_old=0).to_bytes(),
     }
     n_files = len([f for f in os.listdir(st + "/sketches")
@@ -233,7 +237,7 @@ def test_compact_store_preserves_everything(spark, tmp_path):
         "pinned": store.load_sketch(spark, st, "cm", seq=0).to_bytes(),
         "groups": {g: s.to_bytes() for g, s in
                    store.load_group_sketches(spark, st, "g").items()},
-        "gstate": _grouped_manifest_state(spark, st, "g"),
+        "gstate": gstate(),
         "diff": snapshot_diff(spark, st, "cm", seq_old=0).to_bytes(),
     }
     assert before == after
@@ -306,28 +310,109 @@ def test_list_sketches_one_row_per_name_after_race(spark, tmp_path):
     assert listing[0]["sha256"] == _h.sha256(winner.to_bytes()).hexdigest()
 
 
-def test_winners_streaming_matches_window_winners(spark):
-    """winners_streaming must pick exactly the rows _winners picks —
-    without shuffling payloads — and must fall back to the collapsing
-    window when exact-duplicate rows (same name, seq AND sha) exist."""
-    from sketchlib.store import _winners, winners_streaming
+def test_winners_streaming_matches_window_winners(spark, tmp_path):
+    """The reader's winner rule picks, per name, the highest (seq,
+    sha256) row; the Spark blob scan (store.winner_rows) keeps exactly
+    those rows without shuffling payloads, and an exact duplicate (same
+    name, seq AND sha) collapses to ONE row there as well."""
+    from sketchlib import store
 
-    rows = [("a", 0, "s0", bytearray(b"old")), ("a", 2, "s2", bytearray(b"new")),
-            ("b", 1, "s1", bytearray(b"bee")), ("b", 1, "s0", bytearray(b"tie"))]
-    df = spark.createDataFrame(
-        [(n, s, h, bytes(b)) for n, s, h, b in rows],
-        "name string, seq long, sha256 string, blob binary")
-    want = {(r["name"], r["seq"], r["sha256"], bytes(r["blob"]))
-            for r in _winners(df).collect()}
+    path = str(tmp_path / "store")
+    rows = [("a", 0, "s0", b"old"), ("a", 2, "s2", b"new"),
+            ("b", 1, "s1", b"bee"), ("b", 1, "s0", b"tie")]
+    full = [(n, s, "CM01", b, h, -1, "{}") for n, s, h, b in rows]
+
+    def append(rs):
+        (store.one_part_df(spark, rs, store._SKETCH_SCHEMA)
+         .write.mode("append").parquet(path + "/sketches"))
+
+    append(full)
+    want = {("a", 2, "s2", b"new"), ("b", 1, "s1", b"bee")}
+    keys, dup = store.winner_keys(path)
+    assert not dup
+    assert {(r["name"], r["seq"], r["sha256"])
+            for r in keys.to_pylist()} == {w[:3] for w in want}
+    df, n = store.winner_rows(spark, path)
     got = {(r["name"], r["seq"], r["sha256"], bytes(r["blob"]))
-           for r in winners_streaming(df).collect()}
-    assert got == want == {("a", 2, "s2", b"new"), ("b", 1, "s1", b"bee")}
+           for r in df.collect()}
+    assert got == want and n == 2
 
-    # exact duplicate: the semi-join would keep both copies; the
-    # fallback must collapse to ONE row like the window does
-    dup = df.union(spark.createDataFrame(
-        [("a", 2, "s2", b"new")],
-        "name string, seq long, sha256 string, blob binary"))
-    out = winners_streaming(dup).collect()
-    assert len(out) == 2
+    # exact duplicate: the semi-join alone would keep both copies; the
+    # reader flags it and the scan collapses it to ONE row
+    append([full[1]])
+    keys, dup = store.winner_keys(path)
+    assert dup and keys.num_rows == 2
+    out = store.winner_rows(spark, path)[0].collect()
     assert sorted(r["name"] for r in out) == ["a", "b"]
+    assert store.list_sketches(spark, path).count() == 2
+
+
+def test_append_fsyncs_file_and_directory(tmp_path, monkeypatch):
+    """Every durable append fsyncs the new part before the rename and
+    the directory after it — for each store table it writes."""
+    import os
+
+    import pandas as pd
+    from sketchlib import store
+    from sketchlib.countmin import CMConfig, CountMinSketch
+
+    synced = []
+    real = os.fsync
+    monkeypatch.setattr(os, "fsync", lambda fd: (synced.append(
+        os.readlink(f"/proc/self/fd/{fd}")), real(fd))[1])
+    path = str(tmp_path / "store")
+    cm = CountMinSketch(CMConfig(eps=1e-2, delta=0.1, seed=1))
+    lin = pd.DataFrame({"pid": [0], "n_rows": [1], "n_items": [1],
+                        "total_count": [1], "build_ms": [0.5]})
+    store.save_sketch(None, path, "x", cm, lineage=lin)
+    assert len(synced) == 4          # sketches part + dir, lineage part + dir
+    for table in ("sketches", "lineage"):
+        d = os.path.join(path, table)
+        assert d in synced
+        assert any(p.startswith(d + "/.part-") and p.endswith(".tmp")
+                   for p in synced)
+    synced.clear()
+    from sketchlib.incremental import _MANIFEST_SCHEMA
+    store._append_rows(None, path + "/ingested", [("x", 0, "", -1)],
+                       _MANIFEST_SCHEMA)
+    assert len(synced) == 2
+    synced.clear()
+    stats = store.compact_store(None, path)
+    assert len(synced) == 2 * len(stats) == 6
+
+
+def test_mixed_writer_parts_read_identically(spark, tmp_path):
+    """A store table mixing Spark-written and pyarrow-written parts
+    reads the same rows in both engines, and the reader resolves across
+    both writers."""
+    import hashlib
+
+    import pyarrow.dataset as pds
+    from sketchlib import store
+    from sketchlib.countmin import CMConfig, CountMinSketch
+
+    path = str(tmp_path / "store")
+    cfg = CMConfig(eps=1e-2, delta=0.1, seed=1)
+    a, b = CountMinSketch(cfg), CountMinSketch(cfg)
+    a.update_batch(np.array([1, 2, 3], dtype=np.int64))
+    b.update_batch(np.array([4, 5], dtype=np.int64))
+    store.save_sketch(spark, path, "x", a)                      # pyarrow
+    row = [("x", 1, "CM01", b.to_bytes(),
+            hashlib.sha256(b.to_bytes()).hexdigest(), 7, '{"w": 1}')]
+    (store.one_part_df(spark, row, store._SKETCH_SCHEMA)       # Spark
+     .write.mode("append").parquet(path + "/sketches"))
+    store.save_sketch(spark, path, "y", b)                      # pyarrow
+
+    def norm(rs):
+        return sorted((r["name"], r["seq"], r["kind"], bytes(r["blob"]),
+                       r["sha256"], r["n_rows"], r["meta_json"])
+                      for r in rs)
+
+    by_spark = norm(r.asDict() for r in
+                    spark.read.parquet(path + "/sketches").collect())
+    by_arrow = norm(pds.dataset(path + "/sketches", format="parquet")
+                    .to_table().to_pylist())
+    assert by_spark == by_arrow and len(by_spark) == 3
+    assert store.load_sketch(spark, path, "x").to_bytes() == b.to_bytes()
+    assert store.latest_entry(spark, path, "x") == (1, {"w": 1})
+    assert store.save_sketch(spark, path, "x", a) == 2
